@@ -1944,7 +1944,11 @@ def _q_extract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         docs.write.mode("overwrite").parquet(in_dir)
     q = stream_extract(spark, in_dir, out_dir, ck_dir, chunker="naive")
-    q.awaitTermination(300)
+    if not q.awaitTermination(300):
+        # still writing: reading the sink now would compare a partial
+        # stream, and the live query would hold the shared checkpoint
+        q.stop()
+        raise TimeoutError(f"extract_stream did not finish in 300 s: {ck_dir}")
     streamed = spark.read.parquet(out_dir).select(
         "doc_id",
         "chunk_seq",

@@ -68,12 +68,18 @@ def title_vector_blend_bucketed(
     Output is bit-identical to ops/similarity.title_vector_blend."""
     ensure_schema(spark, schema, location)
     tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/").split("/")[-1])
-    chunks_t = f"{schema}.chunk_vecs_{tag}_b{buckets}"
-    titles_t = f"{schema}.title_vecs_{tag}_b{buckets}"
+    # every input that shapes the tables is in their names: a cached table
+    # is reused only when it was built from the same (sf_dir, buckets,
+    # chunks_per_doc)
+    key = f"{tag}_b{buckets}_cpd{chunks_per_doc}"
+    chunks_t = f"{schema}.chunk_vecs_{key}"
+    titles_t = f"{schema}.title_vecs_{key}"
     have = {
         r.tableName for r in spark.sql(f"SHOW TABLES IN {schema}").collect()
     }
-    if refresh or chunks_t.split(".")[1] not in have:
+    # both tables, not just the first written: a crash between the two
+    # writes must rebuild, not fail every later call on the missing table
+    if refresh or not {t.split(".")[1] for t in (chunks_t, titles_t)} <= have:
         # bucket metadata lives in the session catalog: a fresh session
         # cannot reuse a previous session's files AS bucketed tables, so
         # clear any stale on-disk leftovers before rewriting

@@ -37,6 +37,7 @@ from ragflow_spark.operators.extract import (
 )
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
+# one planned split, as plan_splits returns it: row groups [rg_start, rg_end)
 SPLITS_SCHEMA = "path string, rg_start int, rg_end int"
 
 
@@ -124,14 +125,32 @@ def _splits_df(
     spark: SparkSession,
     path: str,
     target_rows: int,
-    giant_threshold: int | None = None,
+    giant_threshold: int | None,
+    per_split,
+    schema: str,
 ) -> tuple[DataFrame, bool]:
+    """One task per planned row-group split; the task returns
+    ``per_split(split_id, (path, rg_start, rg_end))``, a pandas frame of
+    ``schema``. Also returns ``may_have_giants`` from ``plan_splits``.
+
+    The source is ``spark.range`` with one id per partition: pinned without
+    a shuffle, so AQE cannot coalesce the byte-tiny split rows into a few
+    fat tasks, and a JVM operator, so the kernel ``mapInPandas`` is the
+    task's only Python stage. The split list rides in the closure (pickled
+    once per job, ~80 B per split) and each task looks up ``splits[id]``.
+    A Python source (``sc.parallelize`` + ``createDataFrame(rdd)``) would
+    pipeline a second Python worker into every task, and every Python
+    task pays a fixed ~0.16-0.2 s before doing any work (see CLAUDE.md)."""
     splits, may_have_giants = plan_splits(path, target_rows, giant_threshold)
-    # exactly one split per partition, WITHOUT a shuffle: a repartition here
-    # would let AQE coalesce the (byte-tiny) split rows into a handful of
-    # fat tasks and destroy load balance — parallelize pins the layout
-    rdd = spark.sparkContext.parallelize(splits, max(len(splits), 1))
-    return spark.createDataFrame(rdd, SPLITS_SCHEMA), may_have_giants
+
+    def run(batches):
+        for pdf in batches:
+            for split_id in pdf["id"].tolist():
+                yield per_split(split_id, splits[split_id])
+
+    n = len(splits)
+    ids = spark.range(0, n, 1, max(n, 1))
+    return ids.mapInPandas(run, schema=schema), may_have_giants
 
 
 def _giants_scan(spark: SparkSession, path: str, giant_threshold: int) -> DataFrame:
@@ -148,14 +167,32 @@ def _giants_scan(spark: SparkSession, path: str, giant_threshold: int) -> DataFr
     return df.where(pred).select("doc_id", "spans")
 
 
-def _read_split(pdf: pd.DataFrame):
+def _small_docs(split: tuple[str, int, int], giant_threshold: int) -> list:
+    """(doc_id, span records) of one split's docs below ``giant_threshold``;
+    the salted DataFrame path takes the rest."""
     import pyarrow.parquet as pq
 
-    for r in pdf.itertuples():
-        pf = pq.ParquetFile(r.path)
-        yield pf.read_row_groups(
-            list(range(r.rg_start, r.rg_end)), columns=["doc_id", "spans"]
-        )
+    path, rg_start, rg_end = split
+    tbl = pq.ParquetFile(path).read_row_groups(
+        list(range(rg_start, rg_end)),
+        columns=["doc_id", "spans"],
+        use_threads=False,  # one task per core already; no per-task pool
+    )
+    doc_ids, per_doc = _iter_docs(tbl)
+    return [
+        (d, recs) for d, recs in zip(doc_ids, per_doc) if len(recs) < giant_threshold
+    ]
+
+
+def _chunk_docs(docs: list, html_tables: bool, chunk_kw: dict) -> tuple[list, list]:
+    """(doc_id per chunk, chunk dicts) of ``chunk_doc(extract_doc(...))``."""
+    ids_out: list[str] = []
+    rows: list[dict] = []
+    for doc_id, recs in docs:
+        for c in chunk_doc(extract_doc(recs, html_tables=html_tables), **chunk_kw):
+            ids_out.append(doc_id)
+            rows.append(c)
+    return ids_out, rows
 
 
 def extract_chunks_native(
@@ -172,42 +209,33 @@ def extract_chunks_native(
     """parquet → chunks with the reader inside the Python task (hot path) and
     the exploded/salted DataFrame path for the giant-doc tail."""
 
-    def run(batches):
-        for pdf in batches:
-            for tbl in _read_split(pdf):
-                ids_out: list[str] = []
-                rows: list[dict] = []
-                doc_ids, per_doc = _iter_docs(tbl)
-                for doc_id, recs in zip(doc_ids, per_doc):
-                    if len(recs) >= giant_threshold:
-                        continue  # handled by the salted JVM path below
-                    out = extract_doc(recs, html_tables=html_tables)
-                    for c in chunk_doc(
-                        out,
-                        chunker=chunker,
-                        chunk_token_num=chunk_token_num,
-                        delimiter=delimiter,
-                        overlapped_percent=overlapped_percent,
-                    ):
-                        ids_out.append(doc_id)
-                        rows.append(c)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids_out,
-                        "chunker": [c["chunker"] for c in rows],
-                        "chunk_seq": [c["chunk_seq"] for c in rows],
-                        "text": [c["text"] for c in rows],
-                        "token_count": [c["token_count"] for c in rows],
-                        "media_refs": pd.Series(
-                            [c["media_refs"] for c in rows], dtype=object
-                        ),
-                    }
-                )
-
-    splits, may_have_giants = _splits_df(
-        spark, path, target_rows, giant_threshold
+    chunk_kw = dict(
+        chunker=chunker,
+        chunk_token_num=chunk_token_num,
+        delimiter=delimiter,
+        overlapped_percent=overlapped_percent,
     )
-    small = splits.mapInPandas(run, schema=CHUNKS_SCHEMA)
+
+    def per_split(split_id, split):
+        ids_out, rows = _chunk_docs(
+            _small_docs(split, giant_threshold), html_tables, chunk_kw
+        )
+        return pd.DataFrame(
+            {
+                "doc_id": ids_out,
+                "chunker": [c["chunker"] for c in rows],
+                "chunk_seq": [c["chunk_seq"] for c in rows],
+                "text": [c["text"] for c in rows],
+                "token_count": [c["token_count"] for c in rows],
+                "media_refs": pd.Series(
+                    [c["media_refs"] for c in rows], dtype=object
+                ),
+            }
+        )
+
+    small, may_have_giants = _splits_df(
+        spark, path, target_rows, giant_threshold, per_split, CHUNKS_SCHEMA
+    )
     if not may_have_giants:
         # row-group max(n_spans) statistics prove no giants exist: the whole
         # tail pipeline (scan + 3 shuffles) is planned away, metadata-only
@@ -216,13 +244,7 @@ def extract_chunks_native(
     giant_spans = finalize_stage(
         strip_stage(explode_spans(giants)), html_tables=html_tables
     )
-    giant_chunks = chunk_stage(
-        giant_spans,
-        chunker=chunker,
-        chunk_token_num=chunk_token_num,
-        delimiter=delimiter,
-        overlapped_percent=overlapped_percent,
-    )
+    giant_chunks = chunk_stage(giant_spans, **chunk_kw)
     return small.unionByName(giant_chunks)
 
 
@@ -308,6 +330,7 @@ def extract_chunks_native_to_parquet(
     DataFrame (split_id, n_docs, n_chunks, out_file): one row per split =
     per-partition lineage for free, and file-per-split makes reruns
     idempotent (same split → same file name, committed atomically).
+    ``split_id`` is the split's index in ``plan_splits`` order.
 
     ``out_dir`` may be a plain path or an s3://, hdfs://, gs://, file://
     URI — the commit protocol adapts (temp+rename on rename-capable
@@ -323,86 +346,62 @@ def extract_chunks_native_to_parquet(
     fs0, root0 = _resolve_fs(out_dir)
     fs0.create_dir(root0, recursive=True)
 
-    def run(batches):
+    chunk_kw = dict(
+        chunker=chunker,
+        chunk_token_num=chunk_token_num,
+        delimiter=delimiter,
+        overlapped_percent=overlapped_percent,
+    )
+
+    def per_split(split_id, split):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         fs, root = _resolve_fs(out_dir)
-        rename = _use_rename_protocol(fs, direct_write)
-        for pdf in batches:
-            for row in pdf.itertuples():
-                fname = (
-                    f"{root.rstrip('/')}/"
-                    f"part-{os.path.basename(row.path)}-{row.rg_start}-{row.rg_end}.parquet"
-                )
-                if resume:
-                    nrows = _committed_rows(fs, fname)
-                    if nrows is not None:
-                        # split already committed; lineage from footer only
-                        yield pd.DataFrame(
-                            {
-                                "split_id": [int(row.Index)],
-                                "n_docs": [-1],  # not recounted on resume
-                                "n_chunks": [nrows],
-                                "out_file": [fname],
-                            }
-                        )
-                        continue
-                tbl = pq.ParquetFile(row.path).read_row_groups(
-                    list(range(row.rg_start, row.rg_end)),
-                    columns=["doc_id", "spans"],
-                    use_threads=False,
-                )
-                ids_out: list[str] = []
-                rows: list[dict] = []
-                n_docs = 0
-                doc_ids, per_doc = _iter_docs(tbl)
-                for doc_id, recs in zip(doc_ids, per_doc):
-                    if len(recs) >= giant_threshold:
-                        continue
-                    n_docs += 1
-                    out = extract_doc(recs, html_tables=html_tables)
-                    for c in chunk_doc(
-                        out,
-                        chunker=chunker,
-                        chunk_token_num=chunk_token_num,
-                        delimiter=delimiter,
-                        overlapped_percent=overlapped_percent,
-                    ):
-                        ids_out.append(doc_id)
-                        rows.append(c)
-                split_id = int(row.Index)
-                out_tbl = pa.table(
-                    {
-                        "doc_id": pa.array(ids_out, pa.string()),
-                        "chunker": pa.array([c["chunker"] for c in rows], pa.string()),
-                        "chunk_seq": pa.array(
-                            [c["chunk_seq"] for c in rows], pa.int32()
-                        ),
-                        "text": pa.array([c["text"] for c in rows], pa.string()),
-                        "token_count": pa.array(
-                            [c["token_count"] for c in rows], pa.int32()
-                        ),
-                        "media_refs": pa.array(
-                            [c["media_refs"] for c in rows],
-                            pa.list_(pa.string()),
-                        ),
-                    }
-                )
-                _commit_table(fs, fname, out_tbl, compression, rename)
-                yield pd.DataFrame(
-                    {
-                        "split_id": [split_id],
-                        "n_docs": [n_docs],
-                        "n_chunks": [len(rows)],
-                        "out_file": [fname],
-                    }
-                )
+        path_in, rg_start, rg_end = split
+        fname = (
+            f"{root.rstrip('/')}/"
+            f"part-{os.path.basename(path_in)}-{rg_start}-{rg_end}.parquet"
+        )
 
-    splits, may_have_giants = _splits_df(
-        spark, path, target_rows, giant_threshold
+        def lineage(n_docs, n_chunks):
+            return pd.DataFrame(
+                {
+                    "split_id": [split_id],
+                    "n_docs": [n_docs],
+                    "n_chunks": [n_chunks],
+                    "out_file": [fname],
+                }
+            )
+
+        if resume:
+            nrows = _committed_rows(fs, fname)
+            if nrows is not None:
+                # split already committed; lineage from footer only
+                return lineage(-1, nrows)  # n_docs not recounted on resume
+        docs = _small_docs(split, giant_threshold)
+        ids_out, rows = _chunk_docs(docs, html_tables, chunk_kw)
+        out_tbl = pa.table(
+            {
+                "doc_id": pa.array(ids_out, pa.string()),
+                "chunker": pa.array([c["chunker"] for c in rows], pa.string()),
+                "chunk_seq": pa.array([c["chunk_seq"] for c in rows], pa.int32()),
+                "text": pa.array([c["text"] for c in rows], pa.string()),
+                "token_count": pa.array(
+                    [c["token_count"] for c in rows], pa.int32()
+                ),
+                "media_refs": pa.array(
+                    [c["media_refs"] for c in rows], pa.list_(pa.string())
+                ),
+            }
+        )
+        _commit_table(
+            fs, fname, out_tbl, compression, _use_rename_protocol(fs, direct_write)
+        )
+        return lineage(len(docs), len(rows))
+
+    manifest, may_have_giants = _splits_df(
+        spark, path, target_rows, giant_threshold, per_split, MANIFEST_SCHEMA
     )
-    manifest = splits.mapInPandas(run, schema=MANIFEST_SCHEMA)
     if may_have_giants:
         giants_dir = out_dir.rstrip("/") + "/giants"
         if resume:
@@ -417,13 +416,7 @@ def extract_chunks_native_to_parquet(
         giant_spans = finalize_stage(
             strip_stage(explode_spans(giants)), html_tables=html_tables
         )
-        giant_chunks = chunk_stage(
-            giant_spans,
-            chunker=chunker,
-            chunk_token_num=chunk_token_num,
-            delimiter=delimiter,
-            overlapped_percent=overlapped_percent,
-        )
+        giant_chunks = chunk_stage(giant_spans, **chunk_kw)
         # overwrite (not append): the giants output is a pure function of the
         # input, so reruns replace it instead of duplicating every giant doc
         giant_chunks.write.mode("overwrite").parquet(giants_dir)
@@ -439,32 +432,26 @@ def extract_spans_native(
 ) -> DataFrame:
     """parquet → extracted spans, Python-native reader (same routing)."""
 
-    def run(batches):
-        for pdf in batches:
-            for tbl in _read_split(pdf):
-                ids_out: list[str] = []
-                rows: list[dict] = []
-                doc_ids, per_doc = _iter_docs(tbl)
-                for doc_id, recs in zip(doc_ids, per_doc):
-                    if len(recs) >= giant_threshold:
-                        continue
-                    for o in extract_doc(recs, html_tables=html_tables):
-                        ids_out.append(doc_id)
-                        rows.append(o)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids_out,
-                        "seq": [o["seq"] for o in rows],
-                        "kind": [o["kind"] for o in rows],
-                        "text": [o["text"] for o in rows],
-                        "media_ref": [o["media_ref"] for o in rows],
-                    }
-                )
+    def per_split(split_id, split):
+        ids_out: list[str] = []
+        rows: list[dict] = []
+        for doc_id, recs in _small_docs(split, giant_threshold):
+            for o in extract_doc(recs, html_tables=html_tables):
+                ids_out.append(doc_id)
+                rows.append(o)
+        return pd.DataFrame(
+            {
+                "doc_id": ids_out,
+                "seq": [o["seq"] for o in rows],
+                "kind": [o["kind"] for o in rows],
+                "text": [o["text"] for o in rows],
+                "media_ref": [o["media_ref"] for o in rows],
+            }
+        )
 
-    splits, may_have_giants = _splits_df(
-        spark, path, target_rows, giant_threshold
+    small, may_have_giants = _splits_df(
+        spark, path, target_rows, giant_threshold, per_split, OUT_SPANS_SCHEMA
     )
-    small = splits.mapInPandas(run, schema=OUT_SPANS_SCHEMA)
     if not may_have_giants:
         return small
     giants = _giants_scan(spark, path, giant_threshold)

@@ -104,6 +104,33 @@ def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory):
     assert resumed == b
 
 
+def test_sink_manifest_split_ids(spark, corpus_path, tmp_path_factory):
+    """Each manifest row names its planned split: split_id i is
+    plan_splits()[i] and points at that split's part file, on a first run
+    and on a resume rerun that skips every committed split."""
+    import os
+
+    from ragflow_spark.sources.parquet_spans import (
+        extract_chunks_native_to_parquet,
+    )
+
+    splits, _ = plan_splits(corpus_path, target_rows=30, giant_threshold=10**6)
+    assert len(splits) > 1
+    out = str(tmp_path_factory.mktemp("sink_ids") / "chunks")
+    want = {
+        i: os.path.join(out, f"part-{os.path.basename(p)}-{a}-{b}.parquet")
+        for i, (p, a, b) in enumerate(splits)
+    }
+    for resume in (False, True):
+        m = extract_chunks_native_to_parquet(
+            spark, corpus_path, out, giant_threshold=10**6, target_rows=30,
+            resume=resume,
+        ).toPandas()
+        assert sorted(m["split_id"]) == list(range(len(splits)))
+        assert dict(zip(m["split_id"], m["out_file"])) == want
+    assert (m["n_docs"] == -1).all()  # the rerun skipped every split
+
+
 def test_chunks_native_equals_fused_with_giant_routing(spark, corpus_path):
     # giant_threshold=120 forces a real split: some fixture docs exceed it
     native = {

@@ -1,10 +1,13 @@
-"""Physical-plan regression guards for the round-5 fixes: these pin plan
-SHAPES that silently regressed before (AQE re-coalescing the salted strip
-shuffle; the bounded default query batch reaching the scan)."""
+"""Physical-plan regression guards: these pin plan SHAPES that silently
+regressed before (AQE re-coalescing the salted strip shuffle; the bounded
+default query batch reaching the scan) or that carry a measured cost (the
+native reader's split source: one Python worker per split task)."""
 
 from __future__ import annotations
 
 import re
+
+import pytest
 
 
 def test_strip_stage_salted_repartition_has_explicit_count(spark):
@@ -44,3 +47,72 @@ def test_knn_default_batch_predicates_reach_scan(spark):
     )
     assert re.search(r"vec_id#\d+L % 100\) = 0", s), "stride not in scan"
     assert re.search(r"vec_id#\d+L < 1600", s), "cap not in scan"
+
+
+# the small-doc side of the native entry points: the kernel mapInPandas
+# directly over a one-id-per-partition Range, i.e. one Python worker per
+# split task (a Python-RDD source would pipeline a second one)
+_SMALL_SIDE = re.compile(
+    r"MapInPandas [^\n]*\(id#\d+L\)[^\n]*\n"
+    r"[ :|]*\+- (?:\*\(\d+\) )?Range \(0, (\d+), step=1, splits=(\d+)\)"
+)
+
+
+@pytest.fixture(scope="module", params=[1, 4], ids=["one_split", "four_splits"])
+def native_corpus(spark, tmp_path_factory, request):
+    from ragflow_spark.datagen import write_corpus
+
+    p = str(tmp_path_factory.mktemp("native_plan") / "corpus")
+    write_corpus(spark, p, count=10 * request.param, seed=3,
+                 partitions=request.param)
+    return p
+
+
+def _native_entry(spark, entry, corpus, out_dir, giant_threshold):
+    from ragflow_spark.sources import parquet_spans as ps
+
+    if entry == "sink":
+        return ps.extract_chunks_native_to_parquet(
+            spark, corpus, out_dir, giant_threshold=giant_threshold
+        )
+    fn = {"chunks": ps.extract_chunks_native, "spans": ps.extract_spans_native}
+    return fn[entry](spark, corpus, giant_threshold=giant_threshold)
+
+
+@pytest.mark.parametrize("entry", ["chunks", "sink", "spans"])
+def test_native_small_side_is_mapinpandas_over_range(
+    spark, native_corpus, entry, tmp_path
+):
+    """No giants: the whole plan is the small-doc side, one task per
+    planned split, with no ExistingRDD (Python-RDD) scan."""
+    from ragflow_spark.sources.parquet_spans import plan_splits
+
+    splits, may_have_giants = plan_splits(native_corpus, giant_threshold=10**6)
+    assert not may_have_giants
+    df = _native_entry(spark, entry, native_corpus, str(tmp_path / "out"), 10**6)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    m = _SMALL_SIDE.search(plan)
+    assert m, plan
+    assert int(m.group(1)) == int(m.group(2)) == len(splits)
+    assert df.rdd.getNumPartitions() == len(splits)
+
+
+@pytest.mark.parametrize("entry", ["chunks", "spans"])
+def test_native_small_side_under_giant_union(spark, native_corpus, entry):
+    """With a giant tail the small-doc side keeps its shape inside the
+    union with the salted DataFrame path."""
+    from ragflow_spark.sources.parquet_spans import plan_splits
+
+    splits, may_have_giants = plan_splits(native_corpus, giant_threshold=1)
+    assert may_have_giants
+    plan = (
+        _native_entry(spark, entry, native_corpus, None, 1)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Union" in plan and "ExistingRDD" not in plan, plan
+    m = _SMALL_SIDE.search(plan)
+    assert m, plan
+    assert int(m.group(1)) == int(m.group(2)) == len(splits)

@@ -260,3 +260,26 @@ def test_extract_stream_driver_query_all_equal(spark):
         spark, "/root/testdata/sf0.001"
     ).count()
     assert again == len(rows)
+
+
+def test_extract_stream_driver_query_raises_on_timeout(spark, monkeypatch):
+    """A stream that has not finished within the wait must be stopped and
+    reported, never read as a half-written sink."""
+    import __spark_entry__ as entrymod
+    from ragflow_spark.streaming import extract_stream
+
+    class StuckQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            StuckQuery.stopped = True
+
+    monkeypatch.setattr(
+        extract_stream, "stream_extract", lambda *a, **k: StuckQuery()
+    )
+    with pytest.raises(TimeoutError):
+        entrymod.queries()["extract_stream"](spark, "/root/testdata/sf0.001")
+    assert StuckQuery.stopped
