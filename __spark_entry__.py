@@ -1914,6 +1914,23 @@ def _q_table_docs_html(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_DOCS = 40
 
 
+def _stream_cache_dir() -> str:
+    """Input/sink/checkpoint root of the extract_stream driver query. Keyed
+    by the corpus version AND the engine's content digest: a chunker or
+    extract change gets a fresh checkpoint and sink, instead of a checkpoint
+    that marks every file processed over a sink built by the old code."""
+    import os
+    import tempfile
+
+    from ragflow_spark.datagen import CORPUS_VERSION
+    from ragflow_spark.packaging import package_digest
+
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"rs_stream_drv_v{CORPUS_VERSION}_{package_digest()}_{_STREAM_DOCS}",
+    )
+
+
 def _q_extract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest exercised BY THE DRIVER HARNESS (r4 verdict ask
     #9 — the exactly-once machinery was pytest-only): stream a
@@ -1927,16 +1944,12 @@ def _q_extract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (checkpoint + batch_id partition overwrite), so the
     output is stable across invocations."""
     import os
-    import tempfile
 
-    from ragflow_spark.datagen import CORPUS_VERSION, corpus_df
+    from ragflow_spark.datagen import corpus_df
     from ragflow_spark.operators.extract import extract_chunks_fused
     from ragflow_spark.streaming.extract_stream import stream_extract
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_drv_v{CORPUS_VERSION}_{_STREAM_DOCS}",
-    )
+    base = _stream_cache_dir()
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
     ck_dir = os.path.join(base, "ck")

@@ -34,6 +34,7 @@ from ragflow_spark.kernels.extract import (
     strip_rows,
 )
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
+from ragflow_spark.worker_imports import drop_zip_importers
 
 STRIPPED_SCHEMA = (
     "doc_id string, kind string, text string, media_ref string, "
@@ -78,6 +79,7 @@ def strip_stage(exploded: DataFrame, repartition: int | None = None) -> DataFram
     df = df.repartition(repartition, "doc_id", "salt")
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             out_rows: list[dict] = []
             spans = pdf[["doc_id", "kind", "text", "media_ref", "offset"]].to_dict("records")
@@ -136,6 +138,7 @@ def finalize_stage(
     ``failure_count`` lineage metrics and drops them from the output."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         doc_id = pdf["doc_id"].iloc[0]
         try:
             mr = pdf["media_ref"].fillna("")
@@ -176,6 +179,7 @@ def whole_doc_stage(docs: DataFrame, html_tables: bool = False) -> DataFrame:
     giant-doc tail."""
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             ids: list[str] = []
             out_rows: list[dict] = []
@@ -253,6 +257,7 @@ def extract_chunks_fused(
     chunk step shuffles only the reduced span stream."""
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             ids: list[str] = []
             rows: list[dict] = []
@@ -323,6 +328,7 @@ def chunk_stage(
     """Template chunking per document over the extracted span stream."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         doc_id = pdf["doc_id"].iloc[0]
         spans = pdf[["seq", "kind", "text", "media_ref"]].to_dict("records")
         chunks = chunk_doc(
@@ -369,8 +375,7 @@ def with_ltks(chunks: DataFrame) -> DataFrame:
     )
 
     def run(batches):
-        import re as _re
-
+        drop_zip_importers()
         from ragflow_spark.functions.trie_tokenizer import (
             fine_grained_tokenize,
             tokenize,
@@ -426,6 +431,7 @@ def assemble_es_docs(chunks: DataFrame, docnm_col: str = "docnm") -> DataFrame:
     table_re = _TABLE_TAG
 
     def run(batches):
+        drop_zip_importers()
         from ragflow_spark.functions.trie_tokenizer import (
             fine_grained_tokenize,
             tokenize,

@@ -17,29 +17,43 @@ import tempfile
 import zipfile
 
 
-def package_zip(out_path: str | None = None) -> str:
-    """Zip the ragflow_spark package; returns the zip path. Content-hashed
-    name so repeated sessions reuse the artifact."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def _package_files() -> list[str]:
+    """Sorted paths of every ``.py`` file in the package."""
     files = []
-    for root, _dirs, names in os.walk(pkg_dir):
+    for root, _dirs, names in os.walk(_PKG_DIR):
         for n in sorted(names):
             if n.endswith(".py"):
                 files.append(os.path.join(root, n))
+    return sorted(files)
+
+
+def package_digest() -> str:
+    """12-hex content digest of the package sources: changes whenever any
+    engine code does, so caches of engine output can key on it."""
     h = hashlib.sha256()
-    for f in sorted(files):
+    for f in _package_files():
         h.update(f.encode())
         with open(f, "rb") as fh:
             h.update(fh.read())
-    digest = h.hexdigest()[:12]
+    return h.hexdigest()[:12]
+
+
+def package_zip(out_path: str | None = None) -> str:
+    """Zip the ragflow_spark package; returns the zip path. Content-hashed
+    name (``package_digest``) so repeated sessions reuse the artifact."""
     if out_path is None:
-        out_path = os.path.join(tempfile.gettempdir(), f"ragflow_spark-{digest}.zip")
+        out_path = os.path.join(
+            tempfile.gettempdir(), f"ragflow_spark-{package_digest()}.zip"
+        )
     if os.path.exists(out_path):
         return out_path
     tmp = out_path + ".tmp"
-    base = os.path.dirname(pkg_dir)
+    base = os.path.dirname(_PKG_DIR)
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for f in sorted(files):
+        for f in _package_files():
             zf.write(f, os.path.relpath(f, base))
     os.replace(tmp, out_path)  # atomic publish
     return out_path

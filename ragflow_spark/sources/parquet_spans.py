@@ -36,6 +36,7 @@ from ragflow_spark.operators.extract import (
     strip_stage,
 )
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
+from ragflow_spark.worker_imports import drop_zip_importers
 
 # one planned split, as plan_splits returns it: row groups [rg_start, rg_end)
 SPLITS_SCHEMA = "path string, rg_start int, rg_end int"
@@ -139,11 +140,17 @@ def _splits_df(
     task's only Python stage. The split list rides in the closure (pickled
     once per job, ~80 B per split) and each task looks up ``splits[id]``.
     A Python source (``sc.parallelize`` + ``createDataFrame(rdd)``) would
-    pipeline a second Python worker into every task, and every Python
-    task pays a fixed ~0.16-0.2 s before doing any work (see CLAUDE.md)."""
+    pipeline a second Python worker into every task.
+
+    ``run`` first drops the worker's cached zip importers
+    (``drop_zip_importers``): PySpark's per-task
+    ``importlib.invalidate_caches()`` would otherwise re-read every cached
+    archive directory before the worker's next task, a fixed 0.2-0.4 s
+    (see CLAUDE.md)."""
     splits, may_have_giants = plan_splits(path, target_rows, giant_threshold)
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             for split_id in pdf["id"].tolist():
                 yield per_split(split_id, splits[split_id])

@@ -283,3 +283,21 @@ def test_extract_stream_driver_query_raises_on_timeout(spark, monkeypatch):
     with pytest.raises(TimeoutError):
         entrymod.queries()["extract_stream"](spark, "/root/testdata/sf0.001")
     assert StuckQuery.stopped
+
+
+def test_extract_stream_cache_dir_keyed_by_engine_digest(monkeypatch):
+    """An engine change must get a fresh checkpoint and sink: the driver
+    query's cache dir follows the package_zip() content digest."""
+    import os
+
+    import __spark_entry__ as entrymod
+    from ragflow_spark import packaging
+
+    real = packaging.package_digest()
+    assert os.path.basename(packaging.package_zip()) == f"ragflow_spark-{real}.zip"
+    assert real in os.path.basename(entrymod._stream_cache_dir())
+    monkeypatch.setattr(packaging, "package_digest", lambda: "0123456789ab")
+    other = entrymod._stream_cache_dir()
+    assert "0123456789ab" in os.path.basename(other)
+    monkeypatch.undo()
+    assert entrymod._stream_cache_dir() != other
