@@ -26,10 +26,6 @@ _WORD = r"[A-Za-z0-9]{1,4}"
 _CJK = r"[一-鿿]"
 _OTHER = r"[^\sA-Za-z0-9一-鿿]{1,3}"
 
-_WORD_RE = re.compile(_WORD)
-_CJK_RE = re.compile(_CJK)
-_OTHER_RE = re.compile(_OTHER)
-
 # the same counter as a SQL expression template (DuckDB + Spark SQL both
 # support regexp-extract-all / regexp_count style functions)
 SPARK_SQL_EXPR = (
@@ -44,9 +40,16 @@ DUCKDB_SQL_EXPR = (
 )
 
 
-# the three classes are disjoint, so one greedy alternation pass yields
-# exactly the same count as the three separate passes (hot-path form)
-_ALL_RE = re.compile(f"{_WORD}|{_CJK}|{_OTHER}")
+# Hot-path form of the same count, one pass. The three classes are
+# disjoint and together cover every non-space character, so one greedy
+# alternation finds exactly the matches of the three separate passes.
+# Each match also swallows the whitespace before its token (so the scan
+# never fails at a space), and the quantifiers are possessive (nothing
+# after them could use a shorter run). subn counts without building the
+# list of matches. Trailing whitespace is stripped first: rstrip() drops
+# exactly the characters ``\s`` matches, and a failed ``\s*+`` at each of
+# them would be quadratic in the length of the tail.
+_COUNT_RE = re.compile(rf"\s*+(?:{_WORD}+|{_CJK}|{_OTHER}+)")
 
 
 def num_tokens(s: str | None) -> int:
@@ -54,7 +57,7 @@ def num_tokens(s: str | None) -> int:
     rag/utils/__init__.py:81-89 num_tokens_from_string)."""
     if not s:
         return 0
-    return len(_ALL_RE.findall(s))
+    return _COUNT_RE.subn("", s.rstrip())[1]
 
 
 def num_tokens_series(s: pd.Series) -> pd.Series:

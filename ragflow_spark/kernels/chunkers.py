@@ -191,8 +191,7 @@ def naive_merge(
     tk_nums = [0]
     keep = (100 - overlapped_percent) / 100.0
 
-    def add(t: str) -> None:
-        tnum = num_tokens(t)
+    def add(t: str, tnum: int) -> None:
         if cks[-1] == "" or tk_nums[-1] > chunk_token_num * keep:
             if overlapped_percent and cks[-1]:
                 prev = cks[-1]
@@ -206,13 +205,14 @@ def naive_merge(
     dels = get_delimiters(delimiter)
     dels_re = re.compile(f"^(?:{dels})$") if dels else None
     for sec in sections:
-        if num_tokens(sec) < chunk_token_num:
-            add(sec)
+        tnum = num_tokens(sec)
+        if tnum < chunk_token_num:
+            add(sec, tnum)
             continue
         for sub in re.split(f"({dels})", sec, flags=re.DOTALL) if dels else [sec]:
             if not sub or (dels_re and dels_re.match(sub)):
                 continue
-            add(sub)
+            add(sub, num_tokens(sub))
 
     return [c for c in cks if c.strip()]
 
@@ -241,8 +241,7 @@ def naive_merge_with_media(
         if ref and (not refs[-1] or refs[-1][-1] != ref):
             refs[-1].append(ref)
 
-    def add(t: str, ref: str) -> None:
-        tnum = num_tokens(t)
+    def add(t: str, ref: str, tnum: int) -> None:
         if cks[-1] == "" or tk_nums[-1] > chunk_token_num * keep:
             if overlapped_percent and cks[-1]:
                 prev = cks[-1]
@@ -261,14 +260,15 @@ def naive_merge_with_media(
         if not sec.strip():
             attach(ref)  # caption-less figure: ride with the current chunk
             continue
-        if num_tokens(sec) < chunk_token_num:
-            add(sec, ref)
+        tnum = num_tokens(sec)
+        if tnum < chunk_token_num:
+            add(sec, ref, tnum)
             continue
         first = True
         for sub in re.split(f"({dels})", sec, flags=re.DOTALL) if dels else [sec]:
             if not sub or (dels_re and dels_re.match(sub)):
                 continue
-            add(sub, ref if first else "")
+            add(sub, ref if first else "", num_tokens(sub))
             first = False
 
     out_c, out_r = [], []

@@ -42,7 +42,7 @@ from ragflow_spark.kernels.layout import (
     vertical_merge,
 )
 from ragflow_spark.kernels.parsers import parse_json, parse_markdown, parse_txt
-from ragflow_spark.schemas import PAGE_H, strip_geom, unpack_geom
+from ragflow_spark.schemas import PAGE_H, geom_fields, strip_geom
 
 PLAIN_KINDS = {"html", "md", "txt", "json"}
 
@@ -127,19 +127,20 @@ def finalize_doc(rows: list[dict], html_tables: bool = False) -> list[dict]:
     plain_out: list[dict] = []
     boxes: list[dict] = []
     for s in rows:
-        g = unpack_geom(s.get("media_ref"))
+        g = geom_fields(s.get("media_ref"))
         if g is not None:
+            pn, x0, x1, top, bottom, lo = g
             boxes.append(
                 {
                     "kind": s["kind"],
                     "text": s.get("text") or "",
                     "media_ref": s.get("media_ref") or "",
-                    "pn": g.pn,
-                    "x0": g.x0,
-                    "x1": g.x1,
-                    "top": g.top,
-                    "bottom": g.bottom,
-                    "lo": g.layoutno,
+                    "pn": pn,
+                    "x0": x0,
+                    "x1": x1,
+                    "top": top,
+                    "bottom": bottom,
+                    "lo": lo,
                 }
             )
         else:

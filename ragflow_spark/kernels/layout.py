@@ -25,7 +25,8 @@ defined by exactly these functions (executed by the pandas oracle).
 from __future__ import annotations
 
 import re
-from collections import Counter
+from collections import Counter, defaultdict, deque
+from math import isnan
 
 import numpy as np
 
@@ -33,22 +34,30 @@ from ragflow_spark.schemas import PAGE_H, PAGE_W
 
 GARBAGE_KINDS = {"header", "footer", "reference"}
 
-# one alternation (was 5 sequential searches per box — measured hot)
-_JUNK_RE = re.compile(
-    r"^•+$|^[0-9]{1,2} / ?[0-9]{1,2}$|^[0-9]{1,2} of [0-9]{1,2}$"
-    r"|^http://[^ ]{12,}|\(cid *: *[0-9]+ *\)"
+# junk boxes: four patterns anchored at the start of the text (one
+# alternation, tried once by match) and one unanchored "(cid:N)" glyph
+# reference, searched only when "(cid" occurs at all
+_JUNK_HEAD_RE = re.compile(
+    r"•+$|[0-9]{1,2} / ?[0-9]{1,2}$|[0-9]{1,2} of [0-9]{1,2}$|http://[^ ]{12,}"
 )
+_CID_RE = re.compile(r"\(cid *: *[0-9]+ *\)")
 
 _PAGE_DROPPINGS = re.compile(r"[0-9  •一—-]+$")
 _CREDIT = re.compile(r"(数据|资料|图表)*来源[:： ]")
 _TOC_HEAD = re.compile(r"(contents|目录|目次|tableofcontents|致谢|acknowledge)$", re.I)
 _SPACES = re.compile(r"( | |　)+")
+# _TOC_HEAD matches at most its longest heading plus the newline "$" may
+# sit before; lower() never shortens a text and never makes a space, so a
+# text with more characters than that outside _SPACES cannot be a heading
+_TOC_HEAD_MAX = len("tableofcontents") + 1
 _DOT_LEADER = re.compile(r"(\.{4,}|·{2,}|…{2,})")
 _ENG_PREFIX = re.compile(r"[0-9a-zA-Z :'.-]{5,}")
 
 
 def is_junk(text: str) -> bool:
-    return bool(_JUNK_RE.search(text))
+    return bool(
+        _JUNK_HEAD_RE.match(text) or ("(cid" in text and _CID_RE.search(text))
+    )
 
 
 def drop_junk(boxes: list[dict]) -> list[dict]:
@@ -82,25 +91,36 @@ def drop_garbage(boxes: list[dict]) -> list[dict]:
     return kept
 
 
+def median(vals: list[float]) -> float:
+    """np.median of a non-empty list (the middle value, or half the sum of
+    the two middle values; NaN when any value is NaN) without numpy's
+    per-call cost, which dominates on the per-document lists here."""
+    if any(map(isnan, vals)):
+        return float("nan")
+    s = sorted(vals)
+    m = len(s) // 2
+    return float(s[m]) if len(s) % 2 else (s[m - 1] + s[m]) / 2
+
+
 def median_height(boxes: list[dict]) -> float:
     if not boxes:
         return 10.0
-    return float(np.median([b["bottom"] - b["top"] for b in boxes])) or 10.0
+    return median([b["bottom"] - b["top"] for b in boxes]) or 10.0
 
 
 def page_mean_height(boxes: list[dict]) -> dict[int, float]:
     # pure-python means: these run per document per stage on tiny lists,
     # where numpy's per-call overhead dominates the arithmetic
-    acc: dict[int, list[float]] = {}
+    acc: defaultdict[int, list[float]] = defaultdict(list)
     for b in boxes:
-        acc.setdefault(b["pn"], []).append(b["bottom"] - b["top"])
+        acc[b["pn"]].append(b["bottom"] - b["top"])
     return {pn: ((sum(v) / len(v)) or 10.0) for pn, v in acc.items()}
 
 
 def page_mean_width(boxes: list[dict]) -> dict[int, float]:
-    acc: dict[int, list[float]] = {}
+    acc: defaultdict[int, list[float]] = defaultdict(list)
     for b in boxes:
-        acc.setdefault(b["pn"], []).append(b["x1"] - b["x0"])
+        acc[b["pn"]].append(b["x1"] - b["x0"])
     return {pn: ((sum(v) / len(v)) or 100.0) for pn, v in acc.items()}
 
 
@@ -176,7 +196,7 @@ def detect_column_width(boxes: list[dict]) -> float:
     """median box width (rag/app/paper.py:58)."""
     if not boxes:
         return PAGE_W
-    return float(np.median([b["x1"] - b["x0"] for b in boxes]))
+    return median([b["x1"] - b["x0"] for b in boxes])
 
 
 def assign_columns(boxes: list[dict], threshold: float) -> np.ndarray:
@@ -279,6 +299,37 @@ _CONCAT_TAIL2 = ",;:'\"，‘“、；："
 _CONCAT_HEAD = "。；？！?”）),，、："
 
 
+def _keeps_apart(b: dict, nxt: dict, t: str, is_english: bool, mh: dict, mw: dict) -> bool:
+    """vertical_merge's no-merge features: region change, sentence end,
+    a same-page gap over 1.5x mean height, a cross-page x-offset over 4x
+    mean width."""
+    if b["lo"] >= 0 or nxt["lo"] >= 0:
+        region_change = (b["lo"], b["pn"]) != (nxt["lo"], nxt["pn"])
+    else:
+        region_change = b["kind"] != nxt["kind"]
+    return (
+        region_change
+        or t[-1] in _SENT_END_CN
+        or (is_english and t[-1] in _SENT_END_EN)
+        or (
+            b["pn"] == nxt["pn"]
+            and nxt["top"] - b["bottom"] > mh.get(b["pn"], 10.0) * 1.5
+        )
+        or (
+            b["pn"] < nxt["pn"]
+            and abs(b["x0"] - nxt["x0"]) > mw.get(b["pn"], 100.0) * 4
+        )
+    )
+
+
+def _concatting(t: str, nxt: dict) -> bool:
+    """Dangling-punctuation feature that overrides _keeps_apart."""
+    if t[-1] in _CONCAT_TAIL or (len(t) > 1 and t[-2] in _CONCAT_TAIL2):
+        return True
+    t_ = (nxt["text"] or "").strip()
+    return bool(t_) and t_[0] in _CONCAT_HEAD
+
+
 def vertical_merge(boxes: list[dict], is_english: bool) -> list[dict]:
     """Naive up/down merge over the Y-sorted stream (pdf_parser.py:430-479):
     drop cross-page page-number droppings and empty boxes; do NOT merge when
@@ -291,54 +342,51 @@ def vertical_merge(boxes: list[dict], is_english: bool) -> list[dict]:
     mh = page_mean_height(boxes)
     mw = page_mean_width(boxes)
     out: list[dict] = []
-    i = 0
-    bxs = [dict(b) for b in boxes]
-    while i < len(bxs):
-        b = bxs[i]
-        nxt = bxs[i + 1] if i + 1 < len(bxs) else None
+    n = len(boxes)
+    k = 0  # next unread box; ``b`` is the current (possibly merged) one
+    b = None
+    while b is not None or k < n:
+        if b is None:
+            b = dict(boxes[k])
+            k += 1
+        nxt = boxes[k] if k < n else None
         t = (b["text"] or "").strip()
         if nxt is not None and b["pn"] < nxt["pn"] and _PAGE_DROPPINGS.fullmatch(t):
-            bxs.pop(i)
+            b = None
             continue
         if not t:
-            bxs.pop(i)
+            b = None
             continue
         if nxt is None:
             out.append(b)
             break
-        t_ = (nxt["text"] or "").strip()
-        concatting = (
-            t[-1] in _CONCAT_TAIL
-            or (len(t) > 1 and t[-2] in _CONCAT_TAIL2)
-            or (t_ and t_[0] in _CONCAT_HEAD)
-        )
-        region_change = (
-            (b["lo"], b["pn"]) != (nxt["lo"], nxt["pn"])
-            if (b["lo"] >= 0 or nxt["lo"] >= 0)
-            else b["kind"] != nxt["kind"]
-        )
-        nofeats = [
-            region_change,
-            t[-1] in _SENT_END_CN,
-            is_english and t[-1] in _SENT_END_EN,
-            b["pn"] == nxt["pn"]
-            and nxt["top"] - b["bottom"] > mh.get(b["pn"], 10.0) * 1.5,
-            b["pn"] < nxt["pn"]
-            and abs(b["x0"] - nxt["x0"]) > mw.get(b["pn"], 100.0) * 4,
-        ]
         detached = b["x1"] < nxt["x0"] or b["x0"] > nxt["x1"]
-        if (any(nofeats) and not concatting) or detached:
+        if detached or (
+            _keeps_apart(b, nxt, t, is_english, mh, mw) and not _concatting(t, nxt)
+        ):
             out.append(b)
-            i += 1
+            b = None
             continue
         # merge down
         b["text"] = (b["text"] or "") + _joiner(b["text"], nxt["text"]) + (nxt["text"] or "")
         b["bottom"] = nxt["bottom"] + (nxt["pn"] - b["pn"]) * PAGE_H
         b["x0"] = min(b["x0"], nxt["x0"])
         b["x1"] = max(b["x1"], nxt["x1"])
-        bxs[i] = b
-        bxs.pop(i + 1)
+        k += 1
     return out
+
+
+def is_toc_head(text: str) -> bool:
+    if len(text) - text.count(" ") - text.count("　") > _TOC_HEAD_MAX:
+        return False
+    return bool(_TOC_HEAD.match(_SPACES.sub("", text.lower())))
+
+
+def has_dot_leader(text: str) -> bool:
+    # every _DOT_LEADER match contains one of these substrings
+    return ("...." in text or "··" in text or "……" in text) and bool(
+        _DOT_LEADER.search(text)
+    )
 
 
 def filter_toc(boxes: list[dict]) -> list[dict]:
@@ -349,8 +397,7 @@ def filter_toc(boxes: list[dict]) -> list[dict]:
     findit = False
     i = 0
     while i < len(bxs):
-        head = _SPACES.sub("", (bxs[i]["text"] or "").lower())
-        if not _TOC_HEAD.match(head):
+        if not is_toc_head(bxs[i]["text"] or ""):
             i += 1
             continue
         findit = True
@@ -382,7 +429,7 @@ def filter_toc(boxes: list[dict]) -> list[dict]:
 
     dirty: Counter = Counter()
     for b in bxs:
-        if _DOT_LEADER.search(b["text"] or ""):
+        if has_dot_leader(b["text"] or ""):
             dirty[b["pn"]] += 1
     dirty_pages = {pn for pn, c in dirty.items() if c > 3}
     if not dirty_pages:
@@ -552,6 +599,16 @@ _PROJ_PATTERNS = [
 ]
 
 
+# all patterns as one alternation, each wrapped in a named group: at a
+# fixed start the first alternative that matches wins, exactly like trying
+# the patterns in order; a wrapper closes after its inner groups, so
+# ``lastgroup`` names the winner
+_PROJ_ANY = re.compile(
+    "|".join(f"(?P<p{i}>{pat.pattern})" for i, (pat, _) in enumerate(_PROJ_PATTERNS))
+)
+_PROJ_RANK = {f"p{i}": rank for i, (_, rank) in enumerate(_PROJ_PATTERNS)}
+
+
 def proj_match(line: str) -> int | bool | None:
     """Outline-numbering class of a line (pdf_parser.py:881-903): None for
     too-short lines, False for pure-numeric lines, else the pattern rank."""
@@ -559,10 +616,8 @@ def proj_match(line: str) -> int | bool | None:
         return None
     if _PROJ_PURE_NUM.match(line):
         return False
-    for pat, rank in _PROJ_PATTERNS:
-        if pat.match(line):
-            return rank
-    return None
+    m = _PROJ_ANY.match(line)
+    return _PROJ_RANK[m.lastgroup] if m else None
 
 
 def _scrap_usefull(b: dict, pw: float, mh: float) -> bool:
@@ -575,6 +630,11 @@ def _scrap_usefull(b: dict, pw: float, mh: float) -> bool:
     if b["x1"] - b["x0"] > pw / 3:
         return True
     return b["bottom"] - b["top"] > mh
+
+
+def _projection(b: dict) -> bool:
+    """A heading-like box: an outline-numbered line or a layout title."""
+    return bool(proj_match((b["text"] or "").strip())) or b["kind"] == "title"
 
 
 def filter_scraps(boxes: list[dict], page_w: float = PAGE_W) -> list[dict]:
@@ -590,50 +650,44 @@ def filter_scraps(boxes: list[dict], page_w: float = PAGE_W) -> list[dict]:
         return boxes
     mh = page_mean_height(boxes)
     order = {id(b): i for i, b in enumerate(boxes)}
-    bxs = list(boxes)
+    bxs = deque(boxes)
     kept: list[dict] = []
     while bxs:
-        first = bxs[0]
+        first = bxs.popleft()
         mhp = mh.get(first["pn"], 10.0)
-        mj = bool(proj_match((first["text"] or "").strip())) or first["kind"] == "title"
-        lines: list[dict] = []
-        if _scrap_usefull(first, page_w, mhp):
-            cur = bxs.pop(0)
-            lines.append(cur)
-            while True:
-                mmj = (
-                    bool(proj_match((cur["text"] or "").strip()))
-                    or cur["kind"] == "title"
-                )
-                cur_h = cur["bottom"] - cur["top"]
-                nxt = None
-                for i in range(min(19, len(bxs))):
-                    b = bxs[i]
-                    if b["pn"] > cur["pn"]:
-                        break
-                    y_dis = abs(
-                        (cur["pn"] * PAGE_H + (cur["top"] + cur["bottom"]) / 2)
-                        - (b["pn"] * PAGE_H + (b["top"] + b["bottom"]) / 2)
-                    )
-                    if not mmj and y_dis >= 3 * mhp and cur_h < 1.5 * mhp:
-                        break
-                    if not _scrap_usefull(b, page_w, mhp):
-                        continue
-                    x_overlap = not (cur["x1"] < b["x0"] or cur["x0"] > b["x1"])
-                    x_dis = 0.0 if x_overlap else min(
-                        abs(cur["x1"] - b["x0"]), abs(cur["x0"] - b["x1"])
-                    )
-                    if mmj or x_dis < page_w / 10:
-                        nxt = i
-                        break
-                if nxt is None:
+        if not _scrap_usefull(first, page_w, mhp):
+            continue  # waste: narrow, short, untagged
+        mj = _projection(first)
+        lines = [first]
+        cur, mmj = first, mj
+        while True:
+            cur_h = cur["bottom"] - cur["top"]
+            nxt = None
+            for i in range(min(19, len(bxs))):
+                b = bxs[i]
+                if b["pn"] > cur["pn"]:
                     break
-                cur = bxs.pop(nxt)
-                lines.append(cur)
-        else:
-            bxs.pop(0)  # waste: narrow, short, untagged
-        if not lines:
-            continue
+                y_dis = abs(
+                    (cur["pn"] * PAGE_H + (cur["top"] + cur["bottom"]) / 2)
+                    - (b["pn"] * PAGE_H + (b["top"] + b["bottom"]) / 2)
+                )
+                if not mmj and y_dis >= 3 * mhp and cur_h < 1.5 * mhp:
+                    break
+                if not _scrap_usefull(b, page_w, mhp):
+                    continue
+                x_overlap = not (cur["x1"] < b["x0"] or cur["x0"] > b["x1"])
+                x_dis = 0.0 if x_overlap else min(
+                    abs(cur["x1"] - b["x0"]), abs(cur["x0"] - b["x1"])
+                )
+                if mmj or x_dis < page_w / 10:
+                    nxt = i
+                    break
+            if nxt is None:
+                break
+            cur = bxs[nxt]
+            del bxs[nxt]
+            lines.append(cur)
+            mmj = _projection(cur)
         mw = sum(b["x1"] - b["x0"] for b in lines) / len(lines)
         if mj or mw / page_w >= 0.35 or mw > 200:
             kept.extend(lines)

@@ -132,8 +132,12 @@ def pack_geom(g: Geom, blob: str = "") -> str:
     return f"geom://{parts}"
 
 
-def unpack_geom(media_ref: str | None) -> Geom | None:
-    """Decode geometry from media_ref; returns None for plain refs."""
+def geom_fields(
+    media_ref: str | None,
+) -> tuple[int, float, float, float, float, int] | None:
+    """Decode geometry from media_ref as the Geom fields (pn, x0, x1, top,
+    bottom, layoutno) — a plain tuple, as this runs once per span; returns
+    None for plain refs."""
     if not media_ref:
         return None
     if media_ref.startswith("geom://"):
@@ -154,7 +158,7 @@ def unpack_geom(media_ref: str | None) -> Geom | None:
     # x != x is the allocation-free NaN test
     if x0 != x0 or x1 != x1 or top != top or bottom != bottom:
         return None
-    return Geom(pn, x0, x1, top, bottom, lo)
+    return pn, x0, x1, top, bottom, lo
 
 
 def strip_geom(media_ref: str | None) -> str:

@@ -122,6 +122,43 @@ def test_toc_removal_by_prefix():
     assert [b["text"] for b in out] == ["Chapter 1 Intro", "body text here"]
 
 
+def _leader_page(pn, n_leaders):
+    lines = [box(f"Entry {k} ..... {k + 3}", pn=pn, top=72 + 14 * k) for k in range(n_leaders)]
+    return lines + [box("plain body line", pn=pn, top=72 + 14 * n_leaders)]
+
+
+def test_toc_dot_leader_pages_dropped_above_three():
+    # no contents heading: a page with more than 3 dot-leader lines is a
+    # ToC page and goes whole; a page with exactly 3 stays
+    boxes = _leader_page(0, 4) + _leader_page(1, 3) + [box("last page", pn=2)]
+    out = L.filter_toc(boxes)
+    assert [b["pn"] for b in out] == [1, 1, 1, 1, 2]
+    assert sum("....." in b["text"] for b in out) == 3
+
+
+def test_toc_dot_leader_variants():
+    # middle-dot and ellipsis leaders count too; a 3-dot run does not
+    texts = ["a ·· 1", "b …… 2", "c .... 3", "d ··· 4"]
+    boxes = [box(t, pn=0, top=72 + 14 * k) for k, t in enumerate(texts)]
+    assert L.filter_toc(boxes) == []
+    boxes[3] = box("d ... 4", pn=0, top=114)
+    assert L.filter_toc(boxes) == boxes
+
+
+def test_toc_heading_skips_dot_leader_pass():
+    # once a contents heading is found the dot-leader pass must not run:
+    # page 2's four leader lines survive
+    boxes = [
+        box("Contents", pn=0, top=72),
+        box("Intro ..... 3", pn=0, top=86),
+        box("Intro", pn=1, top=72),
+        box("body text", pn=1, top=86),
+    ] + _leader_page(2, 4)
+    out = L.filter_toc(boxes)
+    assert [b["text"] for b in out][:2] == ["Intro", "body text"]
+    assert sum(b["pn"] == 2 for b in out) == 5
+
+
 def test_bullet_merge():
     boxes = [
         box("• item one", top=100, bottom=110),

@@ -1,4 +1,6 @@
 import pandas as pd
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from ragflow_spark.functions.delimiters import get_delimiters
 from ragflow_spark.functions.tokens import num_tokens, num_tokens_series, truncate
@@ -27,11 +29,14 @@ def test_punct_runs():
     assert num_tokens("......") == 2
 
 
-def test_series_matches_scalar():
-    texts = ["", "data", "partition table", "数据分析 with text", "a,b;c", None]
-    s = num_tokens_series(pd.Series(texts))
-    for t, n in zip(texts, s):
-        assert num_tokens(t) == n
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.text(), st.text(alphabet="ab9 数据.,;!…\u3000\n\t"))))
+@example(["", "data", "partition table", "数据分析 with text", "a,b;c", None])
+def test_series_matches_scalar(texts):
+    """The vectorized counter (three str.count passes) and the scalar hot
+    path (one possessive pass) must agree on every string."""
+    s = num_tokens_series(pd.Series(texts, dtype=object))
+    assert list(s) == [num_tokens(t) for t in texts]
 
 
 def test_truncate():
