@@ -57,11 +57,12 @@ def main() -> None:
         import ragflow_spark.kernels.chunkers  # noqa: F401
         import ragflow_spark.kernels.extract  # noqa: F401
         import ragflow_spark.kernels.media_docs  # noqa: F401
-        from ragflow_spark.worker_imports import drop_zip_importers
+        from ragflow_spark.worker_imports import start_task
 
         # after the imports: the worker's next task then has no cached
-        # zip importers for PySpark's per-task invalidate_caches() to re-read
-        drop_zip_importers()
+        # zip importers for PySpark's per-task invalidate_caches() to
+        # re-read, and the imported modules are frozen out of its GC
+        start_task()
         for p in batches:
             yield _pd.DataFrame({"n": [len(p)]})
 

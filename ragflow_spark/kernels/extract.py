@@ -98,25 +98,27 @@ def layout_doc(boxes: list[dict], html_tables: bool = False) -> list[dict]:
     return out
 
 
+def strip_one(kind: str, text: str | None, media_ref: str | None) -> list[tuple]:
+    """Stage-1 for one span → [(kind, text, media_ref, sub)]: a plain-format
+    span without a ``geom://`` ref is parsed into sub-rows, anything else
+    passes through as sub-row 0. The one place that routing rule lives."""
+    mr = media_ref or ""
+    if kind in PLAIN_KINDS and not mr.startswith("geom://"):
+        return [
+            (k, t, "", sub) for sub, (k, t) in enumerate(strip_span(kind, text or ""))
+        ]
+    return [(kind, text or "", mr, 0)]
+
+
 def strip_rows(spans: list[dict]) -> list[dict]:
     """Stage-1 (span-local, salt-safe): parse plain-format spans; geometry
     spans pass through untouched. Each output row carries (offset, sub) so
     doc order can be restored after any shuffle."""
-    rows: list[dict] = []
-    for s in spans:
-        mr = s.get("media_ref") or ""
-        if s["kind"] in PLAIN_KINDS and not mr.startswith("geom://"):
-            for sub, (kind, text) in enumerate(strip_span(s["kind"], s.get("text") or "")):
-                rows.append(
-                    {"kind": kind, "text": text, "media_ref": "",
-                     "offset": s["offset"], "sub": sub}
-                )
-        else:
-            rows.append(
-                {"kind": s["kind"], "text": s.get("text") or "", "media_ref": mr,
-                 "offset": s["offset"], "sub": 0}
-            )
-    return rows
+    return [
+        {"kind": k, "text": t, "media_ref": m, "offset": s["offset"], "sub": sub}
+        for s in spans
+        for k, t, m, sub in strip_one(s["kind"], s.get("text"), s.get("media_ref"))
+    ]
 
 
 def finalize_doc(rows: list[dict], html_tables: bool = False) -> list[dict]:

@@ -11,13 +11,16 @@ handled explicitly"):
 - **finalize** (layout + assembly + emit) is doc-level and order-dependent →
   ``applyInPandas`` over ``groupBy(doc_id)``. Inside, the kernel is
   numpy-vectorized per document; across documents, vectorization comes from
-  Arrow batching. AQE skew-split handles residual partition imbalance.
-- **chunk** is doc-level again but consumes the already-reduced span stream
-  (orders of magnitude smaller than the input), so its shuffle is cheap.
+  Arrow batching.
+- **chunk** is doc-level again. On the chunk entry points' giant route
+  (``giant_chunks``) it runs in the same per-doc stage as finalize, so the
+  route is two shuffles: salt, then doc_id. The staged pipeline keeps the
+  two stages apart because it snapshots the extracted spans in between.
 
-At 100 TB the dominant costs are the input scan (columnar, pruned to
-doc_id+spans) and the one shuffle into finalize; strip's salting bounds the
-largest task by ``salt_block`` spans rather than by the largest document.
+Every shuffle into a Python-kernel stage pins an explicit partition count
+(``kernel_partitions``): AQE sizes partitions by bytes, and these stages are
+byte-small but CPU-huge. Strip's salting bounds the largest task by
+``salt_block`` spans rather than by the largest document.
 """
 
 from __future__ import annotations
@@ -31,15 +34,18 @@ from ragflow_spark.kernels.extract import (
     chunk_doc,
     extract_doc,
     finalize_doc,
-    strip_rows,
+    strip_one,
 )
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
-from ragflow_spark.worker_imports import drop_zip_importers
+from ragflow_spark.worker_imports import start_task
 
+STRIPPED_COLUMNS = ["doc_id", "kind", "text", "media_ref", "offset", "sub"]
 STRIPPED_SCHEMA = (
     "doc_id string, kind string, text string, media_ref string, "
     "offset int, sub int"
 )
+# one doc's extracted spans, OUT_SPANS_SCHEMA minus doc_id
+OUT_COLUMNS = ["seq", "kind", "text", "media_ref"]
 
 
 def explode_spans(docs: DataFrame, salt_block: int = 256) -> DataFrame:
@@ -61,36 +67,51 @@ def explode_spans(docs: DataFrame, salt_block: int = 256) -> DataFrame:
     )
 
 
+def kernel_partitions(spark) -> int:
+    """The explicit shuffle width of every Python-kernel stage: 4 ×
+    defaultParallelism. A bare ``repartition(cols)`` is AQE-coalescible,
+    and these stages are byte-small but CPU-huge (a giant doc's spans,
+    or a handful of giant docs), so AQE — whose only yardstick is bytes —
+    folds them onto one core: it folded the salted strip shuffle to ONE
+    partition (r5 skew bench, straggler cut 5.8x after pinning) and the
+    doc_id shuffle of the per-doc stage likewise. User-specified counts
+    are exempt from AQE."""
+    return spark.sparkContext.defaultParallelism * 4
+
+
+def by_doc(df: DataFrame):
+    """``df`` grouped by doc_id over a pinned ``repartition(n, "doc_id")``
+    (``kernel_partitions``); the group operator reuses that partitioning,
+    so this is the stage's one shuffle."""
+    n = kernel_partitions(df.sparkSession)
+    return df.repartition(n, "doc_id").groupBy("doc_id")
+
+
+def _strip_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Exploded span rows → ``STRIPPED_COLUMNS`` rows, zipped straight from
+    the input columns through ``strip_one``."""
+    rows = [
+        (d, k2, t2, m2, o, sub)
+        for d, k, t, m, o in zip(
+            pdf["doc_id"], pdf["kind"], pdf["text"], pdf["media_ref"],
+            pdf["offset"].tolist(),
+        )
+        for k2, t2, m2, sub in strip_one(k, t, m)
+    ]
+    return pd.DataFrame.from_records(rows, columns=STRIPPED_COLUMNS)
+
+
 def strip_stage(exploded: DataFrame, repartition: int | None = None) -> DataFrame:
     """Format parsing (html/md/txt/json) as an Arrow-batched map. Salted
-    repartition spreads giant docs; the map itself is stateless."""
-    df = exploded
-    # explicit numPartitions: a bare repartition(cols) is AQE-coalescible,
-    # and a giant doc's spans are SMALL by bytes (AQE's only yardstick)
-    # while huge by kernel CPU — AQE folded the salted shuffle back into
-    # one partition, silently re-serializing the exact straggler this
-    # stage exists to spread (measured: skew bench straggler cut 1.0x
-    # before, 5.8x after on 8 cores; the CLAUDE.md tiny-task-list
-    # invariant, now on the giant-doc path). User-specified counts are
-    # exempt from AQE.
-    if not repartition:
-        par = exploded.sparkSession.sparkContext.defaultParallelism
-        repartition = par * 4
-    df = df.repartition(repartition, "doc_id", "salt")
+    repartition (pinned count, see ``kernel_partitions``) spreads giant
+    docs; the map itself is stateless (``_strip_frame``)."""
+    n = repartition or kernel_partitions(exploded.sparkSession)
+    df = exploded.repartition(n, "doc_id", "salt")
 
     def run(batches):
-        drop_zip_importers()
+        start_task()
         for pdf in batches:
-            out_rows: list[dict] = []
-            spans = pdf[["doc_id", "kind", "text", "media_ref", "offset"]].to_dict("records")
-            for s in spans:
-                for r in strip_rows([s]):
-                    r["doc_id"] = s["doc_id"]
-                    out_rows.append(r)
-            yield pd.DataFrame(
-                out_rows,
-                columns=["doc_id", "kind", "text", "media_ref", "offset", "sub"],
-            )
+            yield _strip_frame(pdf)
 
     return df.mapInPandas(run, schema=STRIPPED_SCHEMA)
 
@@ -123,14 +144,29 @@ def _finalize_plain_vectorized(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _finalize_frame(pdf: pd.DataFrame, html_tables: bool) -> pd.DataFrame:
+    """One doc's stripped rows → its (seq, kind, text, media_ref) frame.
+    Docs with NO geometry rows (huge plain-span documents) take the
+    vectorized pandas branch instead of the per-row python kernel — same
+    output by construction and by test. Shared by ``finalize_stage`` and
+    ``giant_chunks``."""
+    mr = pdf["media_ref"].fillna("")
+    has_geom = (
+        mr.str.startswith("geom://") | mr.str.contains("#geom=", regex=False)
+    ).any()
+    if not has_geom:
+        return _finalize_plain_vectorized(pdf)
+    rows = pdf[["kind", "text", "media_ref", "offset", "sub"]].to_dict("records")
+    return pd.DataFrame.from_records(
+        finalize_doc(rows, html_tables=html_tables), columns=OUT_COLUMNS
+    )
+
+
 def finalize_stage(
     stripped: DataFrame, html_tables: bool = False, capture_errors: bool = False
 ) -> DataFrame:
-    """Doc-level layout/assembly/emit: one shuffle on doc_id, then the
-    numpy kernel per document. Docs with NO geometry rows (the common
-    shape on the giant-doc tail: huge plain-span documents) take a
-    vectorized pandas fast path instead of the per-row python kernel —
-    same output by construction and by test.
+    """Doc-level layout/assembly/emit: one pinned shuffle on doc_id
+    (``by_doc``), then the kernel per document (``_finalize_frame``).
 
     capture_errors: a doc whose kernel raises emits a single
     ``kind='__error__'`` marker row (text = exception repr) instead of
@@ -138,37 +174,19 @@ def finalize_stage(
     ``failure_count`` lineage metrics and drops them from the output."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_zip_importers()
-        doc_id = pdf["doc_id"].iloc[0]
+        start_task()
         try:
-            mr = pdf["media_ref"].fillna("")
-            has_geom = (
-                mr.str.startswith("geom://")
-                | mr.str.contains("#geom=", regex=False)
-            ).any()
-            if not has_geom:
-                out_pdf = _finalize_plain_vectorized(pdf)
-                out_pdf.insert(0, "doc_id", doc_id)
-                return out_pdf
-            rows = pdf[["kind", "text", "media_ref", "offset", "sub"]].to_dict(
-                "records"
-            )
-            out = finalize_doc(rows, html_tables=html_tables)
+            out = _finalize_frame(pdf, html_tables)
         except Exception as e:  # noqa: BLE001 — per-doc isolation
             if not capture_errors:
                 raise
-            out = [{"seq": 0, "kind": "__error__", "text": repr(e), "media_ref": ""}]
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id] * len(out),
-                "seq": [o["seq"] for o in out],
-                "kind": [o["kind"] for o in out],
-                "text": [o["text"] for o in out],
-                "media_ref": [o["media_ref"] for o in out],
-            }
-        )
+            out = pd.DataFrame(
+                [(0, "__error__", repr(e), "")], columns=OUT_COLUMNS
+            )
+        out.insert(0, "doc_id", pdf["doc_id"].iloc[0])
+        return out
 
-    return stripped.groupBy("doc_id").applyInPandas(run, schema=OUT_SPANS_SCHEMA)
+    return by_doc(stripped).applyInPandas(run, schema=OUT_SPANS_SCHEMA)
 
 
 def whole_doc_stage(docs: DataFrame, html_tables: bool = False) -> DataFrame:
@@ -179,7 +197,7 @@ def whole_doc_stage(docs: DataFrame, html_tables: bool = False) -> DataFrame:
     giant-doc tail."""
 
     def run(batches):
-        drop_zip_importers()
+        start_task()
         for pdf in batches:
             ids: list[str] = []
             out_rows: list[dict] = []
@@ -243,6 +261,41 @@ def extract_spans(
     return small_out.unionByName(giant_out)
 
 
+def chunks_frame(doc_ids: list, chunks: list[dict]) -> pd.DataFrame:
+    """``CHUNKS_SCHEMA`` frame of ``chunk_doc`` rows, ``doc_ids[i]`` being
+    the doc of ``chunks[i]``."""
+    return pd.DataFrame(
+        {
+            "doc_id": doc_ids,
+            "chunker": [c["chunker"] for c in chunks],
+            "chunk_seq": [c["chunk_seq"] for c in chunks],
+            "text": [c["text"] for c in chunks],
+            "token_count": [c["token_count"] for c in chunks],
+            # explicit object dtype: an empty batch would otherwise
+            # infer float64, which Arrow can't cast to array<string>
+            "media_refs": pd.Series([c["media_refs"] for c in chunks], dtype=object),
+        }
+    )
+
+
+def giant_chunks(giants: DataFrame, html_tables: bool = False, **chunk_kw) -> DataFrame:
+    """Chunks of the giant-doc tail in two shuffles, both pinned to
+    ``kernel_partitions``: explode → salted strip (spreads each giant's
+    spans over every core) → one per-doc stage that finalizes and then
+    runs ``chunk_doc`` (the per-doc stages run side by side, one doc per
+    group). The chunk entry points' shared giant route; ``chunk_kw`` are
+    ``chunk_doc``'s chunker arguments."""
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        start_task()
+        spans = _finalize_frame(pdf, html_tables).to_dict("records")
+        chunks = chunk_doc(spans, **chunk_kw)
+        return chunks_frame([pdf["doc_id"].iloc[0]] * len(chunks), chunks)
+
+    stripped = strip_stage(explode_spans(giants))
+    return by_doc(stripped).applyInPandas(run, schema=CHUNKS_SCHEMA)
+
+
 def extract_chunks_fused(
     docs: DataFrame,
     chunker: str = "naive",
@@ -253,11 +306,16 @@ def extract_chunks_fused(
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """End-to-end extract+chunk in ONE pass for non-giant docs (zero
-    shuffles input→chunks); giant docs fall back to the staged path whose
-    chunk step shuffles only the reduced span stream."""
+    shuffles input→chunks); giant docs take ``giant_chunks``."""
+    chunk_kw = dict(
+        chunker=chunker,
+        chunk_token_num=chunk_token_num,
+        delimiter=delimiter,
+        overlapped_percent=overlapped_percent,
+    )
 
     def run(batches):
-        drop_zip_importers()
+        start_task()
         for pdf in batches:
             ids: list[str] = []
             rows: list[dict] = []
@@ -272,42 +330,17 @@ def extract_chunks_fused(
                     for s in spans
                 ]
                 out = extract_doc(recs, html_tables=html_tables)
-                for c in chunk_doc(
-                    out,
-                    chunker=chunker,
-                    chunk_token_num=chunk_token_num,
-                    delimiter=delimiter,
-                    overlapped_percent=overlapped_percent,
-                ):
+                for c in chunk_doc(out, **chunk_kw):
                     ids.append(doc_id)
                     rows.append(c)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunker": [c["chunker"] for c in rows],
-                    "chunk_seq": [c["chunk_seq"] for c in rows],
-                    "text": [c["text"] for c in rows],
-                    "token_count": [c["token_count"] for c in rows],
-                    "media_refs": pd.Series(
-                            [c["media_refs"] for c in rows], dtype=object
-                        ),
-                }
-            )
+            yield chunks_frame(ids, rows)
 
     small = docs.where(F.size("spans") < giant_threshold)
     giant = docs.where(F.size("spans") >= giant_threshold)
     small_chunks = small.mapInPandas(run, schema=CHUNKS_SCHEMA)
-    giant_spans = finalize_stage(
-        strip_stage(explode_spans(giant)), html_tables=html_tables
+    return small_chunks.unionByName(
+        giant_chunks(giant, html_tables=html_tables, **chunk_kw)
     )
-    giant_chunks = chunk_stage(
-        giant_spans,
-        chunker=chunker,
-        chunk_token_num=chunk_token_num,
-        delimiter=delimiter,
-        overlapped_percent=overlapped_percent,
-    )
-    return small_chunks.unionByName(giant_chunks)
 
 
 def with_chunk_ids(chunks: DataFrame) -> DataFrame:
@@ -325,12 +358,12 @@ def chunk_stage(
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
 ) -> DataFrame:
-    """Template chunking per document over the extracted span stream."""
+    """Template chunking per document over the extracted span stream, on a
+    pinned doc_id shuffle (``by_doc``)."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_zip_importers()
-        doc_id = pdf["doc_id"].iloc[0]
-        spans = pdf[["seq", "kind", "text", "media_ref"]].to_dict("records")
+        start_task()
+        spans = pdf[OUT_COLUMNS].to_dict("records")
         chunks = chunk_doc(
             spans,
             chunker=chunker,
@@ -338,22 +371,9 @@ def chunk_stage(
             delimiter=delimiter,
             overlapped_percent=overlapped_percent,
         )
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id] * len(chunks),
-                "chunker": [c["chunker"] for c in chunks],
-                "chunk_seq": [c["chunk_seq"] for c in chunks],
-                "text": [c["text"] for c in chunks],
-                "token_count": [c["token_count"] for c in chunks],
-                # explicit object dtype: an empty batch would otherwise
-                # infer float64, which Arrow can't cast to array<string>
-                "media_refs": pd.Series(
-                    [c["media_refs"] for c in chunks], dtype=object
-                ),
-            }
-        )
+        return chunks_frame([pdf["doc_id"].iloc[0]] * len(chunks), chunks)
 
-    return out_spans.groupBy("doc_id").applyInPandas(run, schema=CHUNKS_SCHEMA)
+    return by_doc(out_spans).applyInPandas(run, schema=CHUNKS_SCHEMA)
 
 
 # single shared tag-strip contract (rag/nlp/__init__.py:261)
@@ -375,7 +395,7 @@ def with_ltks(chunks: DataFrame) -> DataFrame:
     )
 
     def run(batches):
-        drop_zip_importers()
+        start_task()
         from ragflow_spark.functions.trie_tokenizer import (
             fine_grained_tokenize,
             tokenize,
@@ -431,7 +451,7 @@ def assemble_es_docs(chunks: DataFrame, docnm_col: str = "docnm") -> DataFrame:
     table_re = _TABLE_TAG
 
     def run(batches):
-        drop_zip_importers()
+        start_task()
         from ragflow_spark.functions.trie_tokenizer import (
             fine_grained_tokenize,
             tokenize,

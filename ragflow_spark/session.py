@@ -8,8 +8,26 @@ cores, Arrow batching for pandas UDFs).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# sun_path holds 107 bytes plus NUL; Spark names each socket
+# "/.<uuid4>.sock" (43 bytes) under its socket dir
+_SOCKET_DIR_MAX = 107 - 43
+
+
+def _socket_dir(conf: dict[str, str]) -> str | None:
+    """A socket dir to set when the default one (the JVM's java.io.tmpdir,
+    /tmp unless the driver's extraJavaOptions move it) is too long for an
+    AF_UNIX path: session start would fail with "AF_UNIX path too long".
+    None when the default fits or a dir is already configured."""
+    if "spark.python.unix.domain.socket.dir" in conf:
+        return None
+    m = re.search(
+        r"-Djava\.io\.tmpdir=(\S+)", conf.get("spark.driver.extraJavaOptions", "")
+    )
+    return "/tmp" if m and len(m.group(1)) > _SOCKET_DIR_MAX else None
 
 
 def get_spark(
@@ -47,8 +65,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
+        # JVM <-> Python worker traffic over a Unix socket: on loopback TCP
+        # back-to-back short tasks wait on delayed ACKs
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    sock_dir = _socket_dir(conf)
+    if sock_dir:
+        conf["spark.python.unix.domain.socket.dir"] = sock_dir
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -30,13 +30,14 @@ from pyspark.sql import functions as F
 from ragflow_spark.kernels.extract import chunk_doc, extract_doc
 from ragflow_spark.operators.extract import (
     GIANT_SPAN_THRESHOLD,
-    chunk_stage,
+    chunks_frame,
     explode_spans,
     finalize_stage,
+    giant_chunks,
     strip_stage,
 )
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
-from ragflow_spark.worker_imports import drop_zip_importers
+from ragflow_spark.worker_imports import start_task
 
 # one planned split, as plan_splits returns it: row groups [rg_start, rg_end)
 SPLITS_SCHEMA = "path string, rg_start int, rg_end int"
@@ -142,15 +143,15 @@ def _splits_df(
     A Python source (``sc.parallelize`` + ``createDataFrame(rdd)``) would
     pipeline a second Python worker into every task.
 
-    ``run`` first drops the worker's cached zip importers
-    (``drop_zip_importers``): PySpark's per-task
-    ``importlib.invalidate_caches()`` would otherwise re-read every cached
-    archive directory before the worker's next task, a fixed 0.2-0.4 s
-    (see CLAUDE.md)."""
+    ``run`` first calls ``start_task``: it drops the worker's cached zip
+    importers (PySpark's per-task ``importlib.invalidate_caches()`` would
+    otherwise re-read every cached archive directory before the worker's
+    next task, a fixed 0.2-0.4 s) and freezes the worker's heap out of the
+    daemon's after-task ``gc.collect()`` (``worker_imports``)."""
     splits, may_have_giants = plan_splits(path, target_rows, giant_threshold)
 
     def run(batches):
-        drop_zip_importers()
+        start_task()
         for pdf in batches:
             for split_id in pdf["id"].tolist():
                 yield per_split(split_id, splits[split_id])
@@ -214,7 +215,8 @@ def extract_chunks_native(
     target_rows: int = 2000,
 ) -> DataFrame:
     """parquet → chunks with the reader inside the Python task (hot path) and
-    the exploded/salted DataFrame path for the giant-doc tail."""
+    ``giant_chunks`` (salted strip, then one fused per-doc stage) for the
+    giant-doc tail."""
 
     chunk_kw = dict(
         chunker=chunker,
@@ -224,20 +226,8 @@ def extract_chunks_native(
     )
 
     def per_split(split_id, split):
-        ids_out, rows = _chunk_docs(
-            _small_docs(split, giant_threshold), html_tables, chunk_kw
-        )
-        return pd.DataFrame(
-            {
-                "doc_id": ids_out,
-                "chunker": [c["chunker"] for c in rows],
-                "chunk_seq": [c["chunk_seq"] for c in rows],
-                "text": [c["text"] for c in rows],
-                "token_count": [c["token_count"] for c in rows],
-                "media_refs": pd.Series(
-                    [c["media_refs"] for c in rows], dtype=object
-                ),
-            }
+        return chunks_frame(
+            *_chunk_docs(_small_docs(split, giant_threshold), html_tables, chunk_kw)
         )
 
     small, may_have_giants = _splits_df(
@@ -245,14 +235,10 @@ def extract_chunks_native(
     )
     if not may_have_giants:
         # row-group max(n_spans) statistics prove no giants exist: the whole
-        # tail pipeline (scan + 3 shuffles) is planned away, metadata-only
+        # tail pipeline (scan + 2 shuffles) is planned away, metadata-only
         return small
     giants = _giants_scan(spark, path, giant_threshold)
-    giant_spans = finalize_stage(
-        strip_stage(explode_spans(giants)), html_tables=html_tables
-    )
-    giant_chunks = chunk_stage(giant_spans, **chunk_kw)
-    return small.unionByName(giant_chunks)
+    return small.unionByName(giant_chunks(giants, html_tables=html_tables, **chunk_kw))
 
 
 MANIFEST_SCHEMA = (
@@ -420,13 +406,10 @@ def extract_chunks_native_to_parquet(
                 # last by the parquet committer) — skip the whole tail
                 return manifest
         giants = _giants_scan(spark, path, giant_threshold)
-        giant_spans = finalize_stage(
-            strip_stage(explode_spans(giants)), html_tables=html_tables
-        )
-        giant_chunks = chunk_stage(giant_spans, **chunk_kw)
+        tail = giant_chunks(giants, html_tables=html_tables, **chunk_kw)
         # overwrite (not append): the giants output is a pure function of the
         # input, so reruns replace it instead of duplicating every giant doc
-        giant_chunks.write.mode("overwrite").parquet(giants_dir)
+        tail.write.mode("overwrite").parquet(giants_dir)
     return manifest
 
 

@@ -45,7 +45,12 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("ragflow_spark_extract").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("ragflow_spark_extract")
+        # Python workers over a Unix socket, as get_spark sets it
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     from ragflow_spark.operators.extract import with_chunk_ids

@@ -44,12 +44,12 @@ def main() -> None:
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
         write_corpus(spark, corpus, count=args.docs, seed=args.seed)
 
-    # warmup: fork + import in every worker slot, then drop the cached zip
-    # importers so the first timed task does not re-read their archives
+    # warmup: fork + import in every worker slot, then start_task() so the
+    # first timed task neither re-reads zip archives nor waits on a full GC
     def warm(batches):
-        from ragflow_spark.worker_imports import drop_zip_importers
+        from ragflow_spark.worker_imports import start_task
 
-        drop_zip_importers()
+        start_task()
         for p in batches:
             yield pd.DataFrame({"n": [len(p)]})
 

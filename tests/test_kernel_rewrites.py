@@ -17,11 +17,14 @@ import re
 from collections import Counter
 
 import numpy as np
+import pandas as pd
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ragflow_spark.functions.tokens import num_tokens
 from ragflow_spark.kernels import layout as L
+from ragflow_spark.kernels.extract import PLAIN_KINDS, strip_rows, strip_span
+from ragflow_spark.operators.extract import _strip_frame
 from ragflow_spark.schemas import PAGE_H, PAGE_W, Geom, geom_fields
 
 # ---------------------------------------------------------------- old forms
@@ -269,6 +272,38 @@ def old_unpack_geom(media_ref):
     return Geom(pn, x0, x1, top, bottom, lo)
 
 
+def old_strip_rows(spans):
+    rows = []
+    for s in spans:
+        mr = s.get("media_ref") or ""
+        if s["kind"] in PLAIN_KINDS and not mr.startswith("geom://"):
+            for sub, (kind, text) in enumerate(strip_span(s["kind"], s.get("text") or "")):
+                rows.append(
+                    {"kind": kind, "text": text, "media_ref": "",
+                     "offset": s["offset"], "sub": sub}
+                )
+        else:
+            rows.append(
+                {"kind": s["kind"], "text": s.get("text") or "", "media_ref": mr,
+                 "offset": s["offset"], "sub": 0}
+            )
+    return rows
+
+
+def old_strip_batch(pdf):
+    # the strip stage's per-batch body before it zipped the columns
+    out_rows = []
+    spans = pdf[["doc_id", "kind", "text", "media_ref", "offset"]].to_dict("records")
+    for s in spans:
+        for r in old_strip_rows([s]):
+            r["doc_id"] = s["doc_id"]
+            out_rows.append(r)
+    return pd.DataFrame(
+        out_rows,
+        columns=["doc_id", "kind", "text", "media_ref", "offset", "sub"],
+    )
+
+
 # --------------------------------------------------------------- strategies
 
 FRAGMENTS = [
@@ -458,10 +493,10 @@ GEOM_REF = st.one_of(
 )
 
 
-def _outcome(fn, ref):
+def _outcome(fn, arg):
     try:
-        return fn(ref)
-    except ValueError as e:  # malformed numbers raise, before and after
+        return fn(arg)
+    except (ValueError, IndexError) as e:  # raised before and after
         return type(e)
 
 
@@ -475,3 +510,64 @@ def test_geom_decoding_matches_old(ref):
     if isinstance(old, Geom):
         old = (old.pn, old.x0, old.x1, old.top, old.bottom, old.layoutno)
     assert _outcome(geom_fields, ref) == old
+
+
+# span texts each plain parser splits into several rows, plus free text
+STRIP_TEXT = st.one_of(
+    st.none(),
+    TEXT,
+    st.sampled_from([
+        "<html><body><h1>Title</h1><p>One.</p><p>Two <b>bold</b></p>"
+        "<table><tr><td>a</td><td>b</td></tr></table></body></html>",
+        "<p>only</p>", "<div><script>x()</script>kept</div>", "plain, no tags",
+        "# Head\nbody line\n\n## Sub\n- item\n- item 2\n",
+        "| a | b |\n|---|---|\n| 1 | 2 |\n", "```\ncode\n```",
+        '{"a": "b", "c": [1, 2, {"d": "e"}]}', "[1, 2]", "{not json", "",
+        "line one\nline two\n\n\nline three", "   \n  ",
+    ]),
+)
+STRIP_REF = st.one_of(
+    st.none(),
+    st.sampled_from([
+        "", "geom://0,72,500,100,110", "geom://3,1,2,3,4,0", "geom:",
+        "blob://d/1", "blob://d/1#geom=0,1,2,3,4", "xgeom://1",
+    ]),
+)
+
+
+@st.composite
+def span_batches(draw):
+    """An exploded span batch as the strip stage receives it: plain kinds
+    with and without geometry refs, layout kinds, None texts and refs."""
+    n = draw(st.integers(0, 12))
+    rows = [
+        (
+            draw(st.sampled_from(["d0", "d1"])),
+            draw(st.sampled_from(
+                sorted(PLAIN_KINDS) + ["text", "title", "table", "figure", "header"]
+            )),
+            draw(STRIP_TEXT),
+            draw(STRIP_REF),
+            draw(st.integers(0, 10**6)),
+        )
+        for _ in range(n)
+    ]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "kind", "text", "media_ref", "offset"])
+    pdf["offset"] = pdf["offset"].astype("int32")
+    return pdf
+
+
+@settings(max_examples=300, deadline=None)
+@given(span_batches())
+@example(pd.DataFrame({"doc_id": ["d0"], "kind": ["json"], "text": ["0"],
+                       "media_ref": [None], "offset": [0]}))
+def test_strip_frame_matches_old(pdf):
+    # a top-level JSON scalar makes parse_json raise IndexError, before
+    # and after: the outcomes, exceptions included, must agree
+    new, old = _outcome(_strip_frame, pdf), _outcome(old_strip_batch, pdf)
+    if isinstance(old, pd.DataFrame):
+        pd.testing.assert_frame_equal(new, old)
+    else:
+        assert new == old
+    spans = pdf.to_dict("records")
+    assert _outcome(strip_rows, spans) == _outcome(old_strip_rows, spans)

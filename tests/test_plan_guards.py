@@ -116,3 +116,73 @@ def test_native_small_side_under_giant_union(spark, native_corpus, entry):
     m = _SMALL_SIDE.search(plan)
     assert m, plan
     assert int(m.group(1)) == int(m.group(2)) == len(splits)
+
+
+_DOC_PIN = re.compile(r"RepartitionByExpression \[doc_id#\d+\], (\d+)")
+
+
+@pytest.mark.parametrize("stage", ["finalize", "chunk", "fused"])
+def test_doc_stages_pin_explicit_count(spark, stage):
+    """Every per-doc kernel stage shuffles on doc_id with an explicit
+    count (4 × defaultParallelism): AQE folded the bare doc_id shuffle to
+    ONE task on giant-only inputs, finalizing the giants one after
+    another on one core."""
+    from ragflow_spark.operators import extract as ops
+
+    docs = spark.createDataFrame(
+        [("d0", [("txt", "hello world", "", 0)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    stripped = ops.strip_stage(ops.explode_spans(docs))
+    df = {
+        "finalize": lambda: ops.finalize_stage(stripped),
+        "chunk": lambda: ops.chunk_stage(ops.finalize_stage(stripped)),
+        "fused": lambda: ops.giant_chunks(docs),
+    }[stage]()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    counts = [int(n) for n in _DOC_PIN.findall(plan)]
+    want = 4 * spark.sparkContext.defaultParallelism
+    assert counts and all(n == want for n in counts), plan
+
+
+_EXCHANGE = re.compile(r"Exchange hashpartitioning\(([^)]*)\)")
+
+
+@pytest.mark.parametrize("entry", ["native", "sink", "fused"])
+def test_giant_chunk_route_is_two_pinned_exchanges(
+    spark, native_corpus, entry, tmp_path, monkeypatch
+):
+    """The chunk entry points' giant side: salt shuffle → one fused
+    finalize+chunk stage, both at the pinned count and neither coalesced
+    by AQE once the DataFrame has run (the sink's giant side is the
+    DataFrame it writes; collected here again for its final plan)."""
+    from ragflow_spark.operators import extract as ops
+    from ragflow_spark.sources import parquet_spans as ps
+
+    seen = []
+
+    def recording(*a, **kw):
+        seen.append(ops.giant_chunks(*a, **kw))
+        return seen[-1]
+
+    if entry == "native":
+        df = ps.extract_chunks_native(spark, native_corpus, giant_threshold=1)
+    elif entry == "fused":
+        df = ops.extract_chunks_fused(spark.read.parquet(native_corpus), giant_threshold=1)
+    else:
+        monkeypatch.setattr(ps, "giant_chunks", recording)
+        ps.extract_chunks_native_to_parquet(
+            spark, native_corpus, str(tmp_path / "out"), giant_threshold=1
+        ).collect()
+        (df,) = seen
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    keys = _EXCHANGE.findall(plan)
+    want = 4 * spark.sparkContext.defaultParallelism
+    assert len(keys) == 2, plan
+    salt, doc = sorted(keys, key=lambda k: "salt" not in k)
+    assert re.fullmatch(rf"doc_id#\d+, salt#\d+, {want}", salt), plan
+    assert re.fullmatch(rf"doc_id#\d+, {want}", doc), plan
+    assert df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final and "coalesced" not in final, final

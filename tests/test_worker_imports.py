@@ -1,6 +1,7 @@
-"""drop_zip_importers: the worker-side fix for PySpark's per-task
-``importlib.invalidate_caches()`` cost. Both tests run in a subprocess so
-the pytest interpreter's import state (and its shared Spark session) stay
+"""start_task / drop_zip_importers: the worker-side fixes for PySpark's
+per-task ``importlib.invalidate_caches()`` cost and its daemon's after-task
+``gc.collect()``. The tests run in a subprocess so the pytest
+interpreter's import and GC state (and its shared Spark session) stay
 untouched."""
 
 from __future__ import annotations
@@ -66,8 +67,10 @@ print("DROP_OK")
 def test_reused_worker_starts_task_without_zip_importers(tmp_path):
     """local[1]: one reused Python worker, so after the kernel tasks have
     run, the next task must start with nothing for PySpark's
-    ``invalidate_caches()`` to re-read; the chunks stay equal to
-    ``chunk_doc(extract_doc(...))`` on both runs."""
+    ``invalidate_caches()`` to re-read, and with the worker's heap frozen
+    out of the daemon's after-task collection (a frozen count that stays
+    flat over a further run: no garbage is frozen); the chunks stay equal
+    to ``chunk_doc(extract_doc(...))`` on both runs."""
     code = r"""
 import os, sys
 sys.path.insert(0, %(repo)r)
@@ -105,18 +108,74 @@ assert first == want, "first run differs from chunk_doc(extract_doc)"
 assert second == first, "second run differs from the first"
 
 def probe(batches):
-    import sys, zipimport
+    import gc, sys, zipimport
 
     n = sum(
         isinstance(f, zipimport.zipimporter)
         for f in sys.path_importer_cache.values()
     )
     for p in batches:
-        yield pd.DataFrame({"n": [n] * len(p)})
+        yield pd.DataFrame({"n": [n] * len(p), "frozen": [gc.get_freeze_count()]})
 
-seen = spark.range(0, 1, 1, 1).mapInPandas(probe, "n long").toPandas()["n"]
-assert seen.tolist() == [0], seen.tolist()
+def seen():
+    return spark.range(0, 1, 1, 1).mapInPandas(probe, "n long, frozen long").toPandas()
+
+from ragflow_spark.operators.extract import extract_chunks_fused
+
+def more_tasks():  # the grouped giant route's among them
+    rows(extract_chunks_native(spark, corpus, target_rows=10))
+    extract_chunks_fused(spark.read.parquet(corpus), giant_threshold=1).collect()
+
+more_tasks()
+first_probe = seen()
+assert first_probe["n"].tolist() == [0], first_probe
+for _ in range(3):
+    more_tasks()
+frozen = [int(first_probe["frozen"][0]), int(seen()["frozen"][0])]
+assert frozen[0] > 10000, frozen
+assert abs(frozen[1] - frozen[0]) <= 5, frozen
 spark.stop()
 print("GUARD_OK", len(first))
 """ % {"repo": REPO, "tmp": str(tmp_path)}
     assert "GUARD_OK" in _run(code, tmp_path, timeout=600)
+
+
+def test_start_task_once_per_task(tmp_path):
+    """A grouped stage calls start_task for every group: only the first
+    call of a task collects and freezes; outside a task every call does."""
+    code = r"""
+import sys
+sys.path.insert(0, %(repo)r)
+import gc
+import pandas as pd
+from ragflow_spark.session import get_spark
+from ragflow_spark.worker_imports import start_task
+
+start_task()
+before = gc.get_freeze_count()
+keep = [[i] for i in range(1000)]
+start_task()
+assert gc.get_freeze_count() >= before + 1000, "driver-side call must freeze"
+
+spark = get_spark(cores=1, app_name="start_task_guard", shuffle_partitions=1)
+
+def per_group(pdf):
+    first = gc.get_freeze_count()
+    start_task()
+    return pd.DataFrame({"g": [int(pdf["g"].iloc[0])], "before": [first],
+                         "after": [gc.get_freeze_count()]})
+
+out = (
+    spark.createDataFrame(pd.DataFrame({"g": [0, 1, 2]}))
+    .repartition(1)
+    .groupBy("g")
+    .applyInPandas(per_group, "g long, before long, after long")
+    .toPandas()
+    .sort_values("g")
+)
+# one task holds all three groups: only the first one freezes
+assert (out["after"] > out["before"]).tolist() == [True, False, False], out
+spark.stop()
+print("ONCE_OK")
+""" % {"repo": REPO}
+    assert "ONCE_OK" in _run(code, tmp_path, timeout=300)
